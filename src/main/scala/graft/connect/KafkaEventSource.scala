@@ -172,14 +172,13 @@ final class KafkaEventSource(
       else {
         val ends = mEndOffsets.invoke(consumer, assigned.asJava)
           .asInstanceOf[java.util.Map[AnyRef, java.lang.Long]].asScala
-        val lag = assigned.map { tp =>
+        // Σ end − position: the position is already past the buffered
+        // batch, so the buffer is not in the lag to begin with
+        Some(assigned.map { tp =>
           val pos = mPosition.invoke(consumer, tp)
             .asInstanceOf[java.lang.Long].longValue()
           math.max(0L, ends.get(tp).map(_.longValue()).getOrElse(pos) - pos)
-        }.sum
-        // events already pulled into the local buffer are not "known
-        // but un-polled" for the lag-mode rules
-        Some(math.max(0L, lag - buffer.size))
+        }.sum)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 

@@ -36,6 +36,16 @@ import graft.store.QuadStore
   * SPARQL Update stay on the driver path: update WHERE resolution
   * needs the sequential in-batch state, which folds driver-buffered
   * ops.
+  *
+  * Write-task sizing: the driver-route rows are one local relation,
+  * which Spark would split into `min(rows, defaultParallelism)` write
+  * tasks — one parquet file each, so a 30-quad commit wrote a file per
+  * core. They are coalesced to one task per
+  * `DefaultBulkBytes / defaultParallelism` payload bytes, capped at
+  * `defaultParallelism`: a small commit writes ONE file, and a driver
+  * batch as large as the bulk threshold keeps full write parallelism.
+  * The constant, not this sink's `bulkBytesThreshold`, sets the slice,
+  * because a sink that never routes bulk passes `Long.MaxValue`.
   */
 final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
     bulkBytesThreshold: Long = QuadStoreSink.DefaultBulkBytes,
@@ -238,7 +248,14 @@ final class QuadStoreSink(spark: SparkSession, val store: QuadStore,
           }
         }.toDF())
     }
-    val ops = (resolved ++ bulkOps).foldLeft(local.toSeq.toDF())(_.unionByName(_))
+    // driver-route rows: one write task per slice of payload bytes
+    // (see the class doc), not one per row up to the core count
+    val localBytes = events.iterator
+      .filterNot(m => bulkRoute && m.decoded.kind == "dataset")
+      .map(_.event.sizeInBytes).sum
+    val localOps = local.toSeq.toDF().coalesce(
+      QuadStoreSink.writeTasks(localBytes, spark.sparkContext.defaultParallelism))
+    val ops = (resolved ++ bulkOps).foldLeft(localOps)(_.unionByName(_))
     try store.commitOps(batchId, ops)
     finally checkpointCuts.foreach(graft.plans.Checkpoints.unpersist(_))
     // PA/PD prefix ops update the dataset prefix map in event order
@@ -262,6 +279,15 @@ object QuadStoreSink {
     * its envelope stay on the driver path.
     */
   val DefaultBulkBytes: Long = 32L << 20
+
+  /** Write tasks for `payloadBytes` of driver-route events: one per
+    * `DefaultBulkBytes / parallelism` bytes, at least one, at most
+    * `parallelism` (see the class doc).
+    */
+  def writeTasks(payloadBytes: Long, parallelism: Int): Int = {
+    val perTask = math.max(1L, DefaultBulkBytes / parallelism)
+    math.min(parallelism.toLong, math.max(1L, (payloadBytes - 1) / perTask + 1)).toInt
+  }
 }
 
 /** Counting sink for decision-tree tests — the reference's mock

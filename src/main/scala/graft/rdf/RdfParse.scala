@@ -170,9 +170,17 @@ object RdfParse {
     * object per row (MapObjects loops), a per-quad cost the parser —
     * which already knows the exact output shape — need not pay. Same
     * rows, same schema; only the construction layer changes.
+    *
+    * Batch input only: the decode runs over the input's RDD, which a
+    * streaming DataFrame does not have. A streaming caller decodes each
+    * micro-batch inside `foreachBatch` (as
+    * [[graft.streaming.IngestPipeline]] does); a streaming `df` fails
+    * here with an IllegalArgumentException.
     */
   def decodeEvents(df: DataFrame,
       jsonLdContexts: Map[String, String] = Map.empty): DataFrame = {
+    require(!df.isStreaming, "RdfParse.decodeEvents takes a batch DataFrame; " +
+      "decode a stream per micro-batch inside foreachBatch")
     val spark = df.sparkSession
     // the registry is a plain immutable map captured by the decode
     // closure — it ships once per task like any broadcast-small state

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CachedParquet
 
 import graft.rdf.{PatchOp, Quad}
 
@@ -32,10 +33,21 @@ import graft.rdf.{PatchOp, Quad}
   * because the merge is associative.
   *
   * 100 TB posture:
-  *  - ALL committed segments are read in ONE `spark.read.parquet(paths*)`
-  *    call; the commit ordinal is embedded in the segment directory name
+  *  - ALL committed epoch segments are read in ONE multi-path parquet
+  *    scan; the commit ordinal is embedded in the segment directory name
   *    (`s<ord>-…`) and recovered via `input_file_name()`, so plan size
   *    and driver work stay FLAT in the number of committed epochs.
+  *  - Each store lists an epoch segment directory ONCE: the scan goes
+  *    through one file-listing cache per store
+  *    ([[org.apache.spark.sql.graftbridge.CachedParquet]]), so a read
+  *    lists only the segments committed since the last read, never a
+  *    distributed listing job over the whole tail. This rests on one
+  *    invariant: a directory name is listed only once it is live (named
+  *    by the version pointer), and a live name is never rewritten —
+  *    replays are copy-on-write under a new `-g<n>` name, and a leftover
+  *    of a crashed commit is deleted (and the cache dropped) before its
+  *    name is reused. Base segments stay on `spark.read`: [[gc]] deletes
+  *    disowned `bucket=k` directories inside them.
   *  - [[compact]] folds the log into a deduplicated `base` laid out as
   *    `numBuckets` HASH-BUCKET partitions (`bucket=k` directories,
   *    k = pmod(hash(graph,subject,predicate,obj), numBuckets)). After
@@ -72,6 +84,11 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
 
   private val dir = Paths.get(path)
   Files.createDirectories(dir)
+
+  /** Listing cache for epoch segment directories (see the class doc's
+    * listing invariant).
+    */
+  private val segmentListings = CachedParquet.newCache(spark)
 
   // --- version pointer ------------------------------------------------------
 
@@ -175,6 +192,16 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
         SegRef(s"${plain.replaceAll("-g\\d+$", "")}-g$gen",
           old.ord, Some(batchId))
     }
+    // a directory already under this name (or its `-a` form) is left
+    // by an earlier attempt at this epoch whose version write did not
+    // survive (a crash before it, or a restored pointer). Remove it, or
+    // the `-a` move below fails on a non-empty target on every replay;
+    // and drop the listing cache, which must never serve a rewritten name
+    val leftovers = Seq(ref.name, ref.name + "-a").map(dir.resolve(_)).filter(Files.exists(_))
+    if (leftovers.nonEmpty) {
+      leftovers.foreach(deleteRecursively)
+      segmentListings.invalidateAll()
+    }
     // adds-only detection RIDES the segment write via observe (zero
     // extra passes): a delete-free segment is marked `-a` in its name,
     // and reads over an adds-only tail skip the latest-op fold for a
@@ -237,12 +264,13 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     * never order ops (adds-only folds). The op schema is fixed by
     * [[commitOps]]'s writer, so it is passed explicitly: schema
     * inference re-read a parquet footer per `quads()` call, a per-call
-    * driver tax every store-reading entry paid (guide §6).
+    * driver tax every store-reading entry paid (guide §6). The listing
+    * goes through `segmentListings`, so only segments this store has
+    * not read before are listed.
     */
-  private def readSegmentsRaw(segs: Seq[SegRef]): DataFrame = {
-    val paths = segs.map(s => dir.resolve(s.name).toString)
-    spark.read.schema(OP_SCHEMA).parquet(paths: _*)
-  }
+  private def readSegmentsRaw(segs: Seq[SegRef]): DataFrame =
+    CachedParquet.read(spark, segmentListings,
+      segs.map(s => dir.resolve(s.name).toString), OP_SCHEMA)
 
   private def readSegments(segs: Seq[SegRef]): DataFrame = {
     // file path = …/s<ord>-<tag>/part-….parquet — the commit ordinal is
@@ -672,12 +700,6 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     var removed = 0
     val retired = readRetired()
     val stillDead = scala.collection.mutable.LinkedHashMap[String, Long]()
-    def deleteRecursively(p: java.nio.file.Path): Unit = {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally st.close()
-    }
     // delete only once the path has been dead for the full grace
     // window; otherwise (re-)journal it and leave the files alone
     def reap(p: java.nio.file.Path, key: String): Unit = {
@@ -711,6 +733,13 @@ final class QuadStore(spark: SparkSession, path: String, numBuckets: Int = 16,
     } finally top.close()
     writeRetired(stillDead.toMap)
     removed
+  }
+
+  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+    val st = Files.walk(p)
+    try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(f => Files.delete(f))
+    finally st.close()
   }
 
   private def retiredFile = dir.resolve("_retired")

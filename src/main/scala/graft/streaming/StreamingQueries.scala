@@ -132,7 +132,7 @@ object StreamingQueries {
       (user, s0, e0 + SessionGapUs, n, java.math.BigDecimal.valueOf(v4, 4).doubleValue) }
   }
 
-  private def runToTable(df: DataFrame, mode: String): DataFrame = {
+  private[graft] def runToTable(df: DataFrame, mode: String): DataFrame = {
     val name = "st_" + java.util.UUID.randomUUID.toString.replace("-", "")
     // State partition count is fixed at first checkpoint from
     // spark.sql.shuffle.partitions; every micro-batch then COMMITS one
@@ -159,6 +159,7 @@ object StreamingQueries {
     val chgConf =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prevProv = spark.conf.getOption(provConf)
+    val prevChg = spark.conf.getOption(chgConf)
     val useRocks =
       !sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("hdfs")
     if (useRocks) {
@@ -174,9 +175,9 @@ object StreamingQueries {
       q.awaitTermination()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      if (useRocks) prevProv match {
-        case Some(p) => spark.conf.set(provConf, p)
-        case None => spark.conf.unset(provConf)
+      if (useRocks) Seq(provConf -> prevProv, chgConf -> prevChg).foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
     df.sparkSession.table(name)

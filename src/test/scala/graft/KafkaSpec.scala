@@ -77,9 +77,9 @@ class KafkaSpec extends AnyFunSuite {
     assert(!s.availableImmediately()) // nothing buffered before first poll
     val e0 = s.poll().get // pulls a 2-record batch, serves one
     assert(s.availableImmediately()) // one still buffered
-    // consumer position is 2 (end 5 → raw lag 3), one event is already
-    // in the local buffer → known-but-unserved lag reported as 2
-    assert(s.remaining().contains(2L))
+    // lag is Σ end − position (the EventSource contract): position 2,
+    // end 5 → 3; the buffered event is already past the position
+    assert(s.remaining().contains(3L))
     val e1 = s.poll().get
     assert(!s.availableImmediately())
     assert(Seq(e0.offset, e1.offset) == Seq(0L, 1L))
@@ -93,12 +93,14 @@ class KafkaSpec extends AnyFunSuite {
     s2.close()
   }
 
-  test("remaining() subtracts locally-buffered events") {
+  test("remaining() is end − position; buffered events are not lag") {
     StubBroker.reset(); StubBroker.createTopic("t5")
-    (0 until 4).foreach(i => StubBroker.send("t5", 0, nq(i), CT))
-    val s = src("t5", ReadPolicy.Replay) // default max.poll.records: all 4
-    s.poll() // buffers 4, serves 1, 3 remain buffered
-    assert(s.remaining().contains(0L)) // consumer position at end; buffer not lag
+    (0 until 6).foreach(i => StubBroker.send("t5", 0, nq(i), CT))
+    val s = src("t5", ReadPolicy.Replay, props = Map("max.poll.records" -> "4"))
+    s.poll() // fetches 4 (position 4), serves 1, 3 remain buffered
+    // end 6 − position 4 = 2: the 3 buffered events are neither lag
+    // nor subtracted from it
+    assert(s.remaining().contains(2L))
     s.close()
   }
 

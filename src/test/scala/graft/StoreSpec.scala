@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.connect.OffsetStore
-import graft.rdf.{NQuadsParser, Quad, Term}
+import graft.connect.{Event, MaterialisedEvent, OffsetStore, QuadStoreSink}
+import graft.rdf.{NQuadsParser, Quad, RdfParse, Term}
 import org.apache.spark.sql.functions.col
 import graft.store.{AggView, QuadStore}
 
@@ -683,5 +683,117 @@ class StoreSpec extends AnyFunSuite {
     graft.rdf.TurtleWriter.exportTurtle(
       store.quads().filter(col("graph").isNull), Map.empty, out)
     assert(spark.read.text(out).count() >= 1)
+  }
+
+  private def nqEvent(off: Long, body: String): MaterialisedEvent = {
+    val bytes = body.getBytes("UTF-8")
+    MaterialisedEvent(
+      Event("t", 0, off, null, bytes, Map("Content-Type" -> "application/n-quads")),
+      RdfParse.decode(bytes, "application/n-quads", s"t:0:$off"))
+  }
+
+  /** parquet data files in one committed segment directory */
+  private def partFiles(root: java.nio.file.Path, segment: String): Int = {
+    val st = Files.list(root.resolve(segment))
+    try st.iterator().asScala.count { p =>
+      val n = p.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
+    } finally st.close()
+  }
+
+  private def state(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.collect().map(r => (r.getStruct(1).getString(1), r.getStruct(3).getString(1))).toSet
+
+  test("a small driver-route commit writes one parquet file") {
+    val root = Files.createTempDirectory("qs")
+    val store = new QuadStore(spark, root.toString)
+    val body = (0 until 10).map(i => s"<http://x/s$i> <http://x/p> \"$i\" .").mkString("\n")
+    new QuadStoreSink(spark, store).apply(0, Seq(nqEvent(0, body)))
+    assert(partFiles(root, store.committedSegments().last) == 1)
+    assert(store.count() == 10)
+  }
+
+  test("a driver batch of the bulk-threshold size keeps defaultParallelism write tasks") {
+    import QuadStoreSink.{DefaultBulkBytes, writeTasks}
+    val par = spark.sparkContext.defaultParallelism
+    assert(writeTasks(0, par) == 1)
+    assert(writeTasks(DefaultBulkBytes / par, par) == 1)
+    assert(writeTasks(DefaultBulkBytes / par + 1, par) == 2)
+    assert(writeTasks(DefaultBulkBytes, par) == par)
+    assert(writeTasks(Long.MaxValue, par) == par)
+    // 64 one-quad events of ~512 KiB each: DefaultBulkBytes of payload
+    val literal = "x" * (512 << 10)
+    val events = (0 until 64).map(i =>
+      nqEvent(i, s"<http://x/s$i> <http://x/p> \"$literal\" ."))
+    assert(events.map(_.event.sizeInBytes).sum >= DefaultBulkBytes)
+    val root = Files.createTempDirectory("qs")
+    val store = new QuadStore(spark, root.toString)
+    // a sink that never routes bulk keeps the whole batch on the driver
+    new QuadStoreSink(spark, store, Long.MaxValue).apply(0, events)
+    assert(partFiles(root, store.committedSegments().last) == par)
+    assert(store.count() == 64)
+  }
+
+  test("a growing tail is listed once: no parallel listing job, new files discovered once") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    import spark.implicits._
+    val root = Files.createTempDirectory("qs")
+    val store = new QuadStore(spark, root.toString)
+    val parallelJobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT
+    val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+    val jobs0 = parallelJobs.getCount
+    var model = Set.empty[(String, String)]
+    (0 until 40).foreach { i =>
+      val before = discovered.getCount
+      if (i % 10 == 9) {
+        // a delete-bearing epoch: the ordered fold reads the tail twice
+        store.commitOps(i, Seq(QuadStore.OpRow("D", 0L, null, Term.iri(s"http://x/s${i - 1}"),
+          Term.iri("http://x/p"), Term.lit("1"))).toDF())
+        model -= ((s"http://x/s${i - 1}", "1"))
+      } else {
+        store.addQuads(i, Seq(q(s"s$i", "1"), q("shared", "1")))
+        model ++= Set((s"http://x/s$i", "1"), ("http://x/shared", "1"))
+      }
+      assert(store.count() == model.size, s"commit $i")
+      assert(discovered.getCount - before == partFiles(root, store.committedSegments().last),
+        s"commit $i listed more than its own segment")
+    }
+    assert(parallelJobs.getCount == jobs0, "a read ran a distributed listing job")
+    assert(state(store.quads()) == model)
+  }
+
+  test("a store reopened from disk reads the same state") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("qs")
+    val store = new QuadStore(spark, root.toString)
+    store.addQuads(0, Seq(q("a", "1"), q("b", "1")))
+    store.addQuads(1, Seq(q("c", "1")))
+    store.commitOps(2, Seq(QuadStore.OpRow("D", 0L, null, Term.iri("http://x/a"),
+      Term.iri("http://x/p"), Term.lit("1"))).toDF())
+    val expected = Set(("http://x/b", "1"), ("http://x/c", "1"))
+    assert(state(store.quads()) == expected && store.count() == 2)
+    val reopened = new QuadStore(spark, root.toString)
+    assert(state(reopened.quads()) == expected)
+    assert(reopened.count() == 2)
+  }
+
+  test("replay after a crash between the -a rename and the version write") {
+    val root = Files.createTempDirectory("qs")
+    val store = new QuadStore(spark, root.toString)
+    store.addQuads(0, Seq(q("a", "1")))
+    val version = root.resolve("_version")
+    val aside = root.resolve("_version.aside")
+    Files.copy(version, aside)
+    store.addQuads(1, Seq(q("b", "1")))
+    assert(store.count() == 2) // this read lists the segment the crash orphans
+    // the crash: epoch 1's segment is on disk under its `-a` name, but
+    // the pointer never moved past epoch 0
+    Files.copy(aside, version, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(store.count() == 1)
+    store.addQuads(1, Seq(q("b", "1"))) // the replay
+    val expected = Set(("http://x/a", "1"), ("http://x/b", "1"))
+    assert(store.committedSegments().size == 2)
+    assert(state(store.quads()) == expected && store.count() == 2)
+    assert(new QuadStore(spark, root.toString).count() == 2) // after a restart
   }
 }

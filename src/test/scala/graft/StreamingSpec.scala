@@ -92,4 +92,29 @@ class StreamingSpec extends AnyFunSuite {
       assert(last == Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
     } finally q.stop()
   }
+
+  test("decodeEvents rejects a streaming DataFrame at the call") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[(String, Int, Long, Array[Byte], Array[Byte], String)]
+    val events = stream.toDF()
+      .toDF("topic", "partition", "offset", "key", "value", "contentType")
+    val e = intercept[IllegalArgumentException](graft.rdf.RdfParse.decodeEvents(events))
+    assert(e.getMessage.contains("foreachBatch"), e.getMessage)
+  }
+
+  test("runToTable restores the session conf it overrides") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    val stream = MemoryStream[String]
+    stream.addData("a", "b", "a")
+    val out = graft.streaming.StreamingQueries.runToTable(
+      stream.toDF().groupBy("value").count(), "complete")
+    assert(out.as[(String, Long)].collect().toMap == Map("a" -> 2L, "b" -> 1L))
+    assert(keys.map(k => k -> spark.conf.getOption(k)) == before)
+  }
 }
